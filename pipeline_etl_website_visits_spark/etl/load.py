@@ -35,6 +35,7 @@ from __future__ import annotations
 
 import os
 import re
+from typing import NamedTuple
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -71,6 +72,21 @@ VISITANTES_SCHEMA = StructType(
 )
 
 
+class _SnapshotState(NamedTuple):
+    """What one visitantes writer reads before it publishes: the pointer
+    (current version first, then the retained predecessors) and the current
+    version's ``_buckets`` and ``_applied`` manifests."""
+
+    versions: list[str]
+    n_buckets: int
+    refs: dict[int, str]
+    applied: set[str]
+
+    @property
+    def current(self) -> str | None:
+        return self.versions[0] if self.versions else None
+
+
 class Warehouse:
     """Parquet-backed warehouse with the four ETL tables.
 
@@ -87,27 +103,9 @@ class Warehouse:
         spark: SparkSession,
         root: str,
         n_buckets: int = 16,
-        bucketed: bool = False,
         retention: int = 2,
     ):
-        """``bucketed=True`` opts the visitantes snapshot into Spark's
-        catalog-level bucketing, laid out as ``partitionBy(bucket) +
-        bucketBy(n_buckets, email) + sortBy(email)`` where the ``bucket``
-        partition column is the same murmur3 hash the bucket spec uses.
-        That one layout delivers BOTH scale properties at once (VERDICT r4
-        item 3): the merge's full-outer join needs NO exchange and NO sort
-        on the (big) target side — SURVEY §4.3's shuffle-free re-run story
-        — AND each merge reads and rewrites ONLY the buckets the batch
-        touches (the bucket partition dirs are individually addressable;
-        untouched buckets carry into the new version as partition-location
-        references). That matches the reference MERGE's cost model
-        (touched rows, no re-shuffle; utils/utils_load.py:43-84). The
-        default hash-partition-dir layout keeps the same touched-bucket
-        write pruning without a catalog dependency, at the price of
-        shuffling both merge-join sides. Both modes share pointer/crash-
-        safety and migrate into each other on the next merge.
-
-        ``retention`` is the snapshot-retention contract (VERDICT r9
+        """``retention`` is the snapshot-retention contract (VERDICT r9
         item 7 — the VACUUM knob): how many snapshot VERSIONS each GC
         sweep keeps readable — the current one plus ``retention - 1``
         time-travel predecessors (:meth:`visitantes_versions` /
@@ -124,7 +122,6 @@ class Warehouse:
         self.spark = spark
         self.root = root
         self.n_buckets = int(n_buckets)
-        self.bucketed = bool(bucketed)
         self.retention = int(retention)
 
     def path(self, table: str) -> str:
@@ -222,8 +219,8 @@ class Warehouse:
     # -- stored gram index (incremental-dedup counterpart of the vector
     #    index: shingle the corpus once, score every batch against it) ---
     def _root_tag(self) -> str:
-        """Short warehouse-root hash for catalog-name namespacing (shared
-        by the bucketed-snapshot tables and the gram-index tables)."""
+        """Short warehouse-root hash that namespaces the gram-index catalog
+        tables."""
         import hashlib
 
         return hashlib.md5(self.root.encode("utf-8")).hexdigest()[:8]
@@ -579,34 +576,22 @@ class Warehouse:
         lines = self._read_pointer_text(self.path(self._POINTER))
         return lines[0] if lines else None
 
-    @staticmethod
-    def _version_dir(version: str) -> str:
-        """Data dir name of a version: plain ``visitantes_vN``, or the dir
-        component of a bucketed ``tbl:<catalog_table>:<dir>`` pointer."""
-        return version.rsplit(":", 1)[1] if version.startswith("tbl:") else version
-
-    def _bucketed_table_name(self, n: int) -> str:
-        """Catalog name for a bucketed snapshot version — the warehouse root
-        is folded in so concurrent warehouses in one session never collide."""
-        return f"visitantes_b{self._root_tag()}_v{n}"
-
     def _bucket_col(self, n_buckets: int):
         # coalesce: hash(NULL) is NULL and a NULL bucket would fall out of
         # every partition dir; valid rows always carry an email, but the
         # layout must not depend on that.
         return F.pmod(F.hash(F.coalesce(F.col("email"), F.lit(""))), F.lit(n_buckets))
 
-    def _visitantes_manifest(self, version: str) -> tuple[int, dict[int, str]] | None:
-        """(n_buckets, {bucket -> version dir holding it}) or None (legacy
-        single-dir snapshot, or a catalog-bucketed snapshot written before
-        the partitioned-bucketed layout). Works for both plain
-        ``visitantes_vN`` versions and ``tbl:`` pointers (manifest lives in
-        the version's data dir either way)."""
-        lines = self._read_small_text(
-            os.path.join(self.path(self._version_dir(version)), "_buckets")
-        )
+    def _visitantes_manifest(self, version: str) -> tuple[int, dict[int, str]]:
+        """(n_buckets, {bucket -> version dir holding it}) of ``version``.
+        Every published version carries a ``_buckets`` manifest; a version
+        without one is not a snapshot this warehouse can read or extend."""
+        lines = self._read_small_text(os.path.join(self.path(version), "_buckets"))
         if lines is None:
-            return None
+            raise ValueError(
+                f"visitantes version {version!r} has no _buckets manifest; "
+                f"only the hash-bucket snapshot layout is supported"
+            )
         n_buckets = self.n_buckets
         refs: dict[int, str] = {}
         for line in lines:
@@ -617,10 +602,32 @@ class Warehouse:
                 refs[int(b)] = ver
         return n_buckets, refs
 
-    def _bucket_paths(self, refs: dict[int, str]) -> list[str]:
-        return [
+    def _visitantes_applied_of(self, version: str) -> set[str]:
+        return set(self._read_small_text(os.path.join(self.path(version), "_applied")) or [])
+
+    def _snapshot_state(self) -> _SnapshotState:
+        """Pointer, current manifest and ``_applied`` set, read once. A writer
+        calls this under the visitantes lease and hands the result to the
+        publish, retention and GC steps."""
+        versions = self._read_pointer_text(self.path(self._POINTER)) or []
+        if not versions:
+            return _SnapshotState([], self.n_buckets, {}, set())
+        n_buckets, refs = self._visitantes_manifest(versions[0])
+        return _SnapshotState(
+            versions, n_buckets, refs, self._visitantes_applied_of(versions[0])
+        )
+
+    def _read_buckets(self, refs: dict[int, str]) -> DataFrame:
+        """Read the bucket dirs ``refs`` names, each from the version dir that
+        holds it. Leaf dirs from (possibly) different version roots are read
+        as plain directories — bucket is derivable from email, not a data
+        column."""
+        paths = [
             os.path.join(self.path(ver), f"bucket={b}") for b, ver in sorted(refs.items())
         ]
+        if not paths:
+            return self.spark.createDataFrame([], VISITANTES_SCHEMA)
+        return self.spark.read.schema(VISITANTES_SCHEMA).parquet(*paths)
 
     def forget(self, email: str) -> dict:
         """GDPR erasure (right to be forgotten): remove every row for
@@ -651,41 +658,22 @@ class Warehouse:
         return out
 
     def _forget_visitantes_locked(self, email: str) -> dict:
-        out: dict[str, str] = {}
-        version = self._current_visitantes_version()
-        if version is not None:
-            manifest = self._visitantes_manifest(version)
-            if manifest is None:
-                # legacy flat or legacy bucketBy-only snapshot: full rewrite
-                # null-safe inequality: NULL-email rows are untouched, not
-                # silently erased (email <> 'x' is NULL on a NULL email).
-                snap = self.read_visitantes().filter(~F.col("email").eqNullSafe(email))
-                self._write_visitantes_locked(snap, applied_key=f"forget:{email}")
-                out["visitantes"] = "full-rewrite"
-            else:
-                n_buckets, refs = manifest
-                b = (
-                    self.spark.createDataFrame([(email,)], "email string")
-                    .select(self._bucket_col(n_buckets).alias("b"))
-                    .collect()[0]["b"]
-                )
-                subset = self.read_visitantes(buckets={b}).filter(
-                    ~F.col("email").eqNullSafe(email)
-                )
-                carried = {bb: v for bb, v in refs.items() if bb != b}
-                # route by the snapshot's own layout (tbl: = partitioned-
-                # bucketed catalog table), not the constructor flag — a
-                # Warehouse opened in either mode must erase correctly
-                if version.startswith("tbl:"):
-                    self._publish_visitantes_bucketed(
-                        subset, applied_key=f"forget:{email}", touched_refs=carried
-                    )
-                else:
-                    self._publish_visitantes(
-                        subset, touched_refs=carried, applied_key=f"forget:{email}"
-                    )
-                out["visitantes"] = f"bucket={b}"
-        return out
+        state = self._snapshot_state()
+        if state.current is None:
+            return {}
+        b = (
+            self.spark.createDataFrame([(email,)], "email string")
+            .select(self._bucket_col(state.n_buckets).alias("b"))
+            .collect()[0]["b"]
+        )
+        # null-safe inequality: NULL-email rows are untouched, not silently
+        # erased (email <> 'x' is NULL on a NULL email)
+        subset = self._read_buckets(
+            {bb: v for bb, v in state.refs.items() if bb == b}
+        ).filter(~F.col("email").eqNullSafe(email))
+        carried = {bb: v for bb, v in state.refs.items() if bb != b}
+        self._publish_visitantes(subset, state, carried, applied_key=f"forget:{email}")
+        return {"visitantes": f"bucket={b}"}
 
     def visitantes_versions(self) -> list[str]:
         """Snapshot versions still readable, oldest→current. Each publish
@@ -694,13 +682,9 @@ class Warehouse:
         reference), so this is a bounded ``retention``-deep time-travel
         window — the same contract as a VACUUM'd lakehouse table, with
         the constructor's ``retention`` as the knob."""
-        version = self._current_visitantes_version()
-        if version is None:
-            return []
-        lines = self._read_pointer_text(self.path(self._POINTER)) or []
         # pointer file: current on line 1, predecessors on later lines
         # (already trimmed to the publishing warehouse's retention)
-        return list(reversed([v for v in lines if v]))
+        return list(reversed(self._read_pointer_text(self.path(self._POINTER)) or []))
 
     def read_visitantes(
         self, buckets: set[int] | None = None, version: str | None = None
@@ -708,41 +692,20 @@ class Warehouse:
         """The current snapshot — or, with ``version`` (from
         :meth:`visitantes_versions`), a time-travel read of a retained
         earlier snapshot. ``buckets`` prunes the read to those bucket dirs
-        only (the merge path reads just the buckets a batch touches)."""
-        if version is not None and version not in self.visitantes_versions():
+        only."""
+        versions = self.visitantes_versions()
+        if version is None:
+            if not versions:
+                return self.spark.createDataFrame([], VISITANTES_SCHEMA)
+            version = versions[-1]
+        elif version not in versions:
             raise ValueError(
-                f"visitantes version {version!r} is not retained; "
-                f"available: {self.visitantes_versions()}"
+                f"visitantes version {version!r} is not retained; available: {versions}"
             )
-        if version is None:
-            version = self._current_visitantes_version()
-        if version is None:
-            return self.spark.createDataFrame([], VISITANTES_SCHEMA)
-        if version.startswith("tbl:"):
-            # bucketed snapshot: the catalog scan carries the bucket spec the
-            # merge join's exchange elimination depends on. The partitioned-
-            # bucketed layout (partitionBy(bucket) + bucketBy(email)) also
-            # supports pruned reads: the bucket partition column filters at
-            # the CatalogFileIndex, and the scan STAYS bucketed (verified by
-            # plan test), so a touched-bucket merge joins exchange-free over
-            # just the touched dirs. Legacy bucketBy-only snapshots have no
-            # bucket column and fall back to the full scan.
-            t = self.spark.table(version.split(":")[1])
-            if buckets is not None and "bucket" in t.columns:
-                t = t.filter(F.col("bucket").isin([int(b) for b in buckets]))
-            return t.drop("bucket") if "bucket" in t.columns else t
-        manifest = self._visitantes_manifest(version)
-        if manifest is None:  # legacy layout: one flat dir, no pruning
-            return self.spark.read.parquet(self.path(version))
-        _, refs = manifest
+        _, refs = self._visitantes_manifest(version)
         if buckets is not None:
             refs = {b: v for b, v in refs.items() if b in buckets}
-        paths = self._bucket_paths(refs)
-        if not paths:
-            return self.spark.createDataFrame([], VISITANTES_SCHEMA)
-        # leaf dirs from (possibly) different version roots: read as plain
-        # directories — bucket is derivable from email, not a data column
-        return self.spark.read.schema(VISITANTES_SCHEMA).parquet(*paths)
+        return self._read_buckets(refs)
 
     def visitantes_applied(self) -> set[str]:
         """Batch keys (file names / stream batch ids) already merged into the
@@ -750,12 +713,7 @@ class Warehouse:
         checking this set: a crash after the merge's pointer flip but before
         the bitacora marker must NOT re-apply the batch on the retry."""
         version = self._current_visitantes_version()
-        if version is None:
-            return set()
-        lines = self._read_small_text(
-            os.path.join(self.path(self._version_dir(version)), "_applied")
-        )
-        return set(lines or [])
+        return set() if version is None else self._visitantes_applied_of(version)
 
     def visitantes_changes(self, include_same: bool = False) -> DataFrame:
         """Change data feed between the retained previous snapshot and the
@@ -768,7 +726,7 @@ class Warehouse:
         consumer sees exactly which subjects vanished in the last publish.
 
         One full-outer join on email — the same key both snapshots are
-        bucketed/partitioned on, so at scale the join is co-located
+        hash-bucketed on, so at scale the join is co-located
         (docs/SCALE.md); nothing but changed rows leave the join.
         """
         versions = self.visitantes_versions()
@@ -822,8 +780,6 @@ class Warehouse:
         independent of total snapshot size. Untouched buckets carry over by
         manifest reference, and the pointer flip keeps crash atomicity.
         """
-        from pipeline_etl_website_visits_spark.operators.merge import visitantes_merge
-
         with self._lease("visitantes-writer"):
             self._merge_visitantes_locked(
                 source, process_date=process_date, applied_key=applied_key
@@ -837,30 +793,8 @@ class Warehouse:
     ) -> None:
         from pipeline_etl_website_visits_spark.operators.merge import visitantes_merge
 
-        version = self._current_visitantes_version()
-        manifest = self._visitantes_manifest(version) if version else None
-        # a mode switch needs a one-time FULL rewrite, incremental carry
-        # would be wrong-layout: bucketed mode cannot ADD-PARTITION plain
-        # hash-partitioned files into a catalog-bucketed table (the
-        # bucketed scan derives bucket ids from FILE NAMES and throws
-        # 'Invalid bucket file' on names without the bucket suffix), and
-        # legacy flat / legacy bucketBy-only snapshots have no manifest.
-        layout_matches = version is not None and (
-            version.startswith("tbl:") == self.bucketed
-        )
-        if version is not None and (manifest is None or not layout_matches):
-            merged = visitantes_merge(
-                self.read_visitantes(),
-                source,
-                process_date=process_date,
-                # null-safe equality only when the target carries no bucket
-                # spec the join could otherwise use
-                null_safe=not version.startswith("tbl:"),
-            )
-            self._write_visitantes_locked(merged, applied_key=applied_key)
-            return
-        n_buckets, refs = manifest if manifest else (self.n_buckets, {})
-        bucket = self._bucket_col(n_buckets)
+        state = self._snapshot_state()
+        bucket = self._bucket_col(state.n_buckets)
         # touched buckets: bounded driver-side collect (≤ n_buckets values)
         touched = {
             int(r[0])
@@ -868,152 +802,36 @@ class Warehouse:
         }
         if not touched:
             return
-        target_subset = self.read_visitantes(buckets=touched)
-        if self.bucketed:
-            # partitioned-bucketed mode gets BOTH round-4 wins at once
-            # (VERDICT r4 item 3): the pruned catalog scan stays Bucketed,
-            # so the full-outer merge join has NO target-side exchange
-            # (plain-equality keys to preserve the bucketBy(email) spec),
-            # AND only the touched buckets' dirs are rewritten — untouched
-            # buckets carry into the new version as partition-location
-            # references. The reference's MySQL MERGE (utils/utils_load.py:
-            # 43-84) was touched-rows with no re-shuffle; this is the
-            # distributed equivalent of that cost model.
-            merged = visitantes_merge(
-                target_subset, source, process_date=process_date, null_safe=False
-            )
-            self._publish_visitantes_bucketed(
-                merged, applied_key=applied_key, touched_refs=refs
-            )
-            return
+        target_subset = self._read_buckets(
+            {b: v for b, v in state.refs.items() if b in touched}
+        )
         merged = visitantes_merge(target_subset, source, process_date=process_date)
-        self._publish_visitantes(merged, touched_refs=refs, applied_key=applied_key)
+        self._publish_visitantes(merged, state, state.refs, applied_key=applied_key)
 
     def write_visitantes(self, df: DataFrame, applied_key: str | None = None) -> None:
         """Full snapshot (re)write — initial load / explicit rebucket. The
         per-batch path is ``merge_visitantes`` (touched buckets only)."""
         with self._lease("visitantes-writer"):
-            self._write_visitantes_locked(df, applied_key=applied_key)
-
-    def _write_visitantes_locked(self, df: DataFrame, applied_key: str | None = None) -> None:
-        if self.bucketed:
-            self._publish_visitantes_bucketed(df, applied_key=applied_key)
-        else:
-            self._publish_visitantes(df, touched_refs={}, applied_key=applied_key)
-
-    def _publish_visitantes_bucketed(
-        self,
-        df: DataFrame,
-        applied_key: str | None,
-        touched_refs: dict[int, str] | None = None,
-    ) -> None:
-        """Publish a snapshot version as a PARTITIONED catalog-bucketed
-        external table (``partitionBy(bucket) + bucketBy(n_buckets, email)
-        + sortBy(email)``), under the same versioned-dir + atomic-pointer
-        protocol as the plain-partitioned layout. Pointer line:
-        ``tbl:<catalog_table>:<data_dir>``.
-
-        The ``bucket`` partition column is derived from the SAME
-        murmur3-hash the bucketBy spec uses, so each partition dir holds
-        exactly one bucket's emails — which makes single buckets
-        addressable: ``touched_refs`` entries whose bucket this write did
-        not materialize are attached to the new version's table via
-        ``ALTER TABLE ADD PARTITION ... LOCATION`` pointing INTO the prior
-        version's dirs (carry-by-reference, zero data movement), and the
-        ``_buckets`` manifest records the dir each bucket lives in for GC
-        retention. Write cost per publish is therefore ∝ touched buckets
-        while the catalog scan keeps the table-level bucket spec that
-        eliminates the merge join's target-side exchange."""
-        version_now = self._current_visitantes_version()
-        manifest_now = self._visitantes_manifest(version_now) if version_now else None
-        n_buckets = manifest_now[0] if manifest_now else self.n_buckets
-        applied = self.visitantes_applied()
-        if applied_key is not None:
-            applied = applied | {applied_key}
-        n = int(self._version_dir(version_now).rsplit("_v", 1)[1]) + 1 if version_now else 0
-        dirname = f"visitantes_v{n}"
-        table = self._bucketed_table_name(n)
-        self.spark.sql(f"DROP TABLE IF EXISTS {table}")
-        (
-            df.withColumn("bucket", self._bucket_col(n_buckets).cast("int"))
-            .write.format("parquet")
-            .partitionBy("bucket")
-            .bucketBy(n_buckets, "email")
-            .sortBy("email")
-            .option("path", self.path(dirname))
-            .mode("overwrite")
-            .saveAsTable(table)
-        )
-        fs, vdir, jvm = self._fs(self.path(dirname))
-        written = {
-            int(str(st.getPath().getName()).split("=", 1)[1])
-            for st in fs.listStatus(vdir)
-            if str(st.getPath().getName()).startswith("bucket=")
-        }
-        carry = {
-            b: ver for b, ver in (touched_refs or {}).items() if b not in written
-        }
-        if carry:
-            # ONE catalog statement for all carried buckets — a per-bucket
-            # loop would serialize n_buckets-1 metastore round trips per
-            # merge, defeating the touched-bucket cost model at scale
-            clauses = " ".join(
-                f"PARTITION (bucket={b}) "
-                f"LOCATION '{os.path.join(self.path(ver), f'bucket={b}')}'"
-                for b, ver in sorted(carry.items())
-            )
-            self.spark.sql(f"ALTER TABLE {table} ADD {clauses}")
-        refs = dict(carry)
-        refs.update({b: dirname for b in written})
-        manifest_lines = [f"n_buckets={n_buckets}"] + [
-            f"{b} {ver}" for b, ver in sorted(refs.items())
-        ]
-        self._write_small_text(
-            os.path.join(self.path(dirname), "_buckets"),
-            "\n".join(manifest_lines) + "\n",
-        )
-        self._write_small_text(
-            os.path.join(self.path(dirname), "_applied"),
-            ("\n".join(sorted(applied)) + "\n") if applied else "",
-        )
-        version = f"tbl:{table}:{dirname}"
-        # line 1: current; lines 2..retention: predecessors (retained by
-        # the GC) — the bounded time-travel window
-        # read_visitantes(version=...) serves
-        retained = self._publish_retained(version)
-        self._gc_visitantes(retained)
-        # drop superseded catalog entries (data dirs are GC'd above; external
-        # tables keep catalog metadata until dropped — best-effort cosmetic:
-        # a leftover entry after a retention change is metadata only)
-        if n >= self.retention:
-            self.spark.sql(
-                f"DROP TABLE IF EXISTS {self._bucketed_table_name(n - self.retention)}"
-            )
+            self._publish_visitantes(df, self._snapshot_state(), {}, applied_key=applied_key)
 
     def _publish_visitantes(
         self,
         df: DataFrame,
-        touched_refs: dict[int, str],
+        state: _SnapshotState,
+        carried: dict[int, str],
         applied_key: str | None,
     ) -> None:
-        """Write ``df`` into a new version's bucket dirs, carry ``touched_refs``
+        """Write ``df`` into a new version's bucket dirs, carry ``carried``
         entries whose bucket is absent from ``df`` by reference, publish.
 
         Publish order (crash-safe): data dirs → ``_applied`` + ``_buckets``
-        manifests inside the version dir → atomic pointer rename. A crash at
+        manifests inside the version dir → atomic pointer flip. A crash at
         any earlier point leaves the previous version intact and current.
         """
-        version_now = self._current_visitantes_version()
-        manifest_now = self._visitantes_manifest(version_now) if version_now else None
-        n_buckets = manifest_now[0] if manifest_now else self.n_buckets
-
-        applied = self.visitantes_applied()
-        if applied_key is not None:
-            applied = applied | {applied_key}
-        n = int(version_now.rsplit("_v", 1)[1]) + 1 if version_now else 0
+        n = int(state.current.rsplit("_v", 1)[1]) + 1 if state.current else 0
         version = f"visitantes_v{n}"
 
-        out = df.withColumn("bucket", self._bucket_col(n_buckets))
+        out = df.withColumn("bucket", self._bucket_col(state.n_buckets))
         out.write.mode("overwrite").partitionBy("bucket").parquet(self.path(version))
         # which buckets did this write actually materialize?
         fs, vdir, jvm = self._fs(self.path(version))
@@ -1022,56 +840,48 @@ class Warehouse:
             for st in fs.listStatus(vdir)
             if str(st.getPath().getName()).startswith("bucket=")
         }
-        refs = {b: ver for b, ver in touched_refs.items() if b not in written}
+        refs = {b: ver for b, ver in carried.items() if b not in written}
         refs.update({b: version for b in written})
 
-        manifest_lines = [f"n_buckets={n_buckets}"] + [
+        manifest_lines = [f"n_buckets={state.n_buckets}"] + [
             f"{b} {ver}" for b, ver in sorted(refs.items())
         ]
         self._write_small_text(
             os.path.join(self.path(version), "_buckets"), "\n".join(manifest_lines) + "\n"
         )
+        applied = state.applied
+        if applied_key is not None:
+            applied = applied | {applied_key}
         self._write_small_text(
             os.path.join(self.path(version), "_applied"),
             ("\n".join(sorted(applied)) + "\n") if applied else "",
         )
         # repoint through the commit backend (atomic overwrite — no
-        # delete-to-rename gap; line 1: current, lines 2..retention:
-        # predecessors for the bounded time-travel window
-        # read_visitantes(version=...) serves)
-        retained = self._publish_retained(version)
-        self._gc_visitantes(retained)
-
-    def _publish_retained(self, version: str) -> list[str]:
-        """Prepend ``version`` to the pointer's retained-version list,
-        trimmed to the warehouse's ``retention`` window, and publish
-        atomically. Returns the retained list (newest first) for the GC
-        sweep. Reading the OLD pointer here (not just version_now) is
-        what lets retention > 2 carry the deeper history forward."""
-        prev_lines = self._read_pointer_text(self.path(self._POINTER)) or []
-        retained = [version] + [v for v in prev_lines if v != version][
+        # delete-to-rename gap). Line 1: current; lines 2..retention: the
+        # predecessors read_visitantes(version=...) serves. Carrying the OLD
+        # pointer's list (not just its head) is what lets retention > 2
+        # keep the deeper history.
+        retained = [version] + [v for v in state.versions if v != version][
             : self.retention - 1
         ]
         self._publish_pointer(self.path(self._POINTER), "\n".join(retained))
-        return retained
+        known = {version: refs}
+        if state.current is not None:
+            known[state.current] = state.refs
+        self._gc_visitantes(retained, known)
 
-    def _gc_visitantes(self, retained: list[str]) -> None:
+    def _gc_visitantes(self, retained: list[str], known: dict[str, dict[int, str]]) -> None:
         """Delete version dirs referenced by no RETAINED version's manifest
         (each retained version is kept with its full reference closure, so
         a time-travel read of any pointer-listed version always serves —
         the retention window expressed over reference sets instead of
-        consecutive numbering)."""
+        consecutive numbering). ``known`` holds manifests the caller has
+        already read; only retained versions outside it are read here."""
         keep: set[str] = set()
         for ver in retained:
-            if ver is None:
-                continue
-            keep.add(self._version_dir(ver))
-            # both layouts carry a _buckets manifest whose referenced dirs
-            # must survive (tbl: versions reference prior dirs through
-            # partition locations)
-            manifest = self._visitantes_manifest(ver)
-            if manifest is not None:
-                keep.update(manifest[1].values())
+            refs = known[ver] if ver in known else self._visitantes_manifest(ver)[1]
+            keep.add(ver)
+            keep.update(refs.values())
         fs, root_path, jvm = self._fs(self.root)
         if not fs.exists(root_path):
             return

@@ -97,7 +97,10 @@ def normalize_and_cast(valid: DataFrame) -> DataFrame:
     D7 ruling: int columns cast directly (unparseable → NULL, literal 0
     survives); string columns trim then map "-"/"0" → NULL; date columns
     parse strictly as dd/MM/yyyy HH:mm (unparseable → NULL, matching
-    pandas errors="coerce").
+    pandas errors="coerce"). The ``try_`` forms keep unparseable → NULL
+    under ANSI mode too, where a plain cast or ``to_timestamp`` raises: a
+    row can pass the date regex and still name no real instant
+    (31/02/2024).
     """
     df = valid.drop(*[c for c in _FLAG_COLS if c in valid.columns])
     df = df.withColumnsRenamed(S.COLUMNS_TO_MAP)
@@ -107,9 +110,11 @@ def normalize_and_cast(valid: DataFrame) -> DataFrame:
             t = F.trim(F.col(c))
             exprs.append(F.when(t.isin("-", "0") | (t == ""), None).otherwise(t).alias(c))
         elif c in S.TS_COLUMNS:
-            exprs.append(F.to_timestamp(F.trim(F.col(c)), S.DATE_FORMAT).alias(c))
+            exprs.append(
+                F.try_to_timestamp(F.trim(F.col(c)), F.lit(S.DATE_FORMAT)).alias(c)
+            )
         elif c in S.INT_COLUMNS:
-            exprs.append(F.col(c).cast("int").alias(c))
+            exprs.append(F.col(c).try_cast("int").alias(c))
         else:
             exprs.append(F.col(c))
     return df.select(*exprs)

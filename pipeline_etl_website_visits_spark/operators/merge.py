@@ -12,11 +12,10 @@ visitantes), with the SURVEY §0.1 rulings applied:
 
 Spark-first design: the upsert is a full-outer join between the target
 table and the (small) batch aggregate, then one select with per-column
-merge rules (a full-outer join cannot broadcast — both sides' unmatched
-rows must surface — so it shuffles; bucketing both sides removes that);
-the target is only rewritten where keys changed — at scale the target
-would be bucketed by the merge key so re-runs shuffle nothing, or backed
-by Delta's MERGE INTO which has identical semantics.
+merge rules. A full-outer join cannot broadcast — both sides' unmatched
+rows must surface — so it shuffles; ``Warehouse.merge_visitantes`` keeps
+that shuffle small by reading only the hash buckets the batch touches and
+rewriting only those. Delta's MERGE INTO has identical semantics.
 """
 
 from __future__ import annotations
@@ -91,20 +90,12 @@ def visitantes_merge(
     target: DataFrame,
     source: DataFrame,
     process_date: str | None = None,
-    null_safe: bool = True,
 ) -> DataFrame:
-    """The concrete visitantes upsert (email-keyed), all rules applied.
+    """The concrete visitantes upsert (email-keyed, null-safe), all rules
+    applied.
 
     ``process_date`` (ISO yyyy-mm-dd) pins "current" year/month for
     deterministic tests; defaults to the batch's max fechaUltimaVisita.
-
-    ``null_safe=False`` joins on plain equality instead of ``eqNullSafe``:
-    required by the bucketed-warehouse path, because null-safe equality
-    rewrites the join keys to ``(coalesce(email,''), isnull(email))``, which
-    no longer matches the table's ``bucketBy(email)`` spec and silently
-    disables exchange elimination. Only safe when the key is non-null on
-    both sides (the VISITANTES_SCHEMA declares email non-nullable; the
-    batch aggregate groups by it).
     """
     if process_date is not None:
         cur = F.lit(process_date).cast("date")
@@ -114,12 +105,7 @@ def visitantes_merge(
 
     t = target.select([F.col(c).alias(f"t_{c}") for c in target.columns])
     s = source.select([F.col(c).alias(f"s_{c}") for c in source.columns])
-    cond = (
-        F.col("t_email").eqNullSafe(F.col("s_email"))
-        if null_safe
-        else F.col("t_email") == F.col("s_email")
-    )
-    joined = t.join(s, cond, "full_outer")
+    joined = t.join(s, F.col("t_email").eqNullSafe(F.col("s_email")), "full_outer")
 
     t_last = F.col("t_fechaUltimaVisita")
     matched = F.col("t_email").isNotNull() & F.col("s_email").isNotNull()

@@ -79,7 +79,7 @@ def _fan_out(spark: SparkSession, sf_dir: str, name: str, df: DataFrame) -> Data
     than one scan split; real multi-split inputs never reach this path.
     """
     try:
-        size = os.path.getsize(table_path(sf_dir, name))
+        size = _table_bytes(table_path(sf_dir, name))
     except OSError:
         return df
     raw = str(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b"))
@@ -91,6 +91,24 @@ def _fan_out(spark: SparkSession, sf_dir: str, name: str, df: DataFrame) -> Data
         spark.sparkContext.defaultParallelism, max(1, -(-size // max(per_task, 1)))
     )
     return df.repartition(width)
+
+
+def _table_bytes(path: str) -> int:
+    """On-disk bytes of a parquet table: the file itself, or the sum of a
+    directory table's data files (the ones Spark lists: no ``_``/``.``
+    prefix on the file or any directory above it). ``os.path.getsize`` of a directory is its inode size, about
+    4 KiB whatever the table holds."""
+    if not os.path.isdir(path):
+        return os.path.getsize(path)
+    total = 0
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        total += sum(
+            os.path.getsize(os.path.join(root, fn))
+            for fn in files
+            if not fn.startswith(("_", "."))
+        )
+    return total
 
 
 def _parquet_timestamp_columns(path: str) -> dict[str, str]:

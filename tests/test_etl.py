@@ -94,6 +94,28 @@ def test_date_validation_strictness(spark, report_dir):
     assert flagged.filter(F.col("is_valid")).count() == 0
 
 
+def test_unparseable_valid_cells_load_as_null(spark, report_dir, tmp_path):
+    """Valid rows whose int or date cells do not parse load with NULL in
+    those cells; under ANSI mode a plain cast would fail the whole file."""
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    bad_int, bad_date = FX.valid_row(0), FX.valid_row(1)
+    bad_int[6] = "x"                    # Opens
+    bad_date[4] = "31/02/2024 10:00"   # Fecha envio: passes the regex, no such day
+    path = FX.write_csv(
+        os.path.join(report_dir, "report_unparseable.txt"), FX.HEADER, [bad_int, bad_date]
+    )
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    result = process_file(spark, wh, path, process_date="2026-03-28")
+    assert result.status == S.STATUS_OK
+
+    rows = {r["email"]: r for r in wh.read("estadisticas").collect()}
+    assert rows["user0@example.com"]["opens"] is None
+    assert rows["user0@example.com"]["fechaEnvio"] is not None
+    assert rows["user1@example.com"]["fechaEnvio"] is None
+    assert rows["user1@example.com"]["opens"] == 1
+    assert wh.read_visitantes().count() == 2
+
+
 def test_process_directory_end_to_end(spark, report_dir, tmp_path):
     FX.make_allvalid(report_dir)
     FX.make_mixed(report_dir)

@@ -104,3 +104,38 @@ def test_all_tables_timestamps_normalized(spark, tmp_path):
         int(x.replace(tzinfo=datetime.timezone.utc).timestamp()) for x in TS[:2]
     )
     assert vals == expected
+
+
+def test_fan_out_sizes_directory_tables_by_their_part_files(spark, tmp_path):
+    """A directory-shaped table is sized by the sum of its part files, not
+    by the directory inode (about 4 KiB), so a multi-file table gets one
+    fan-out task per ``spark.graft.fanOutBytesPerTask`` bytes."""
+    import math
+    import os
+    import random
+
+    tdir = tmp_path / "events.parquet"
+    tdir.mkdir()
+    rng = random.Random(7)
+    for i in range(4):
+        t = pa.table({"v": pa.array([rng.getrandbits(62) for _ in range(2000)], pa.int64())})
+        pq.write_table(t, str(tdir / f"part-{i:05d}.parquet"))
+    (tdir / "_SUCCESS").write_text("")
+    parts = [os.path.getsize(tdir / f) for f in os.listdir(tdir) if f.startswith("part-")]
+    assert tables._table_bytes(str(tdir)) == sum(parts)
+
+    per_task = 8192
+    assert os.path.getsize(tdir) <= per_task < sum(parts) // 2  # old sizing: width 1
+    prev = spark.conf.get("spark.graft.fanOutBytesPerTask", None)
+    spark.conf.set("spark.graft.fanOutBytesPerTask", str(per_task))
+    try:
+        df = load_table(spark, str(tmp_path), "events", fan_out=True)
+        want = min(spark.sparkContext.defaultParallelism, math.ceil(sum(parts) / per_task))
+        assert want > 1
+        assert df.rdd.getNumPartitions() == want
+        assert df.count() == 8000
+    finally:
+        if prev is None:
+            spark.conf.unset("spark.graft.fanOutBytesPerTask")
+        else:
+            spark.conf.set("spark.graft.fanOutBytesPerTask", prev)
