@@ -141,15 +141,9 @@ def main() -> None:
     with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
                            "BENCH_FULL.json"), "w") as f:
         json.dump({**summary, "queries": timings}, f, indent=1)
-    # The stdout line MUST survive the driver's 2000-char tail capture
-    # whole: a head-truncated JSON line is unparseable IN TOTO, which
-    # nulled the entire r13→r14 round-over-round comparison (VERDICT r14
-    # item 1 — the old "queries dict first so overflow truncates entries
-    # not the summary" comment was simply wrong about parseability). At
-    # 215 queries even centisecond-compact per-query entries overflow, so:
-    # print the full line only while it still FITS with margin; otherwise
-    # print the guaranteed-small summary object and point at
-    # BENCH_FULL.json, which always carries full names + 3-decimal seconds.
+    # One JSON line, every run: the compact per-query map (name prefix ->
+    # centiseconds) plus the summary, including artifact_build_sec.
+    # BENCH_FULL.json is its full-precision twin.
     compact = {n.split("_")[0]: int(round(t * 100)) for n, t in timings.items()}
     assert len(compact) == len(timings), "query name prefixes must stay unique"
     line = json.dumps(
@@ -160,10 +154,6 @@ def main() -> None:
         },
         separators=(",", ":"),
     )
-    if len(line) > 1900:
-        line = json.dumps(
-            {**summary, "queries_in": "BENCH_FULL.json"}, separators=(",", ":")
-        )
     print(line)
 
 

@@ -1146,7 +1146,7 @@ def register_gram_index(
     session, the parquet files do not) as a bucketed external table,
     without rewriting a byte. Only valid over save_gram_index output: the
     bucket spec must match how the files were written (bucket ids live in
-    file names), which the ``_SUCCESS``-gated caller contract ensures."""
+    file names), which a committed ``artifacts.stored`` build ensures."""
     _check_identifier(table)
     spark.sql(
         f"CREATE TABLE {table} (old_id BIGINT, gram BIGINT) USING parquet "

@@ -18,6 +18,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from pipeline_etl_website_visits_spark import artifacts
 from pipeline_etl_website_visits_spark.functions import ratio_round, xxhash64_long
 from pipeline_etl_website_visits_spark.operators.dedup import (  # noqa: F401
     fingerprint,
@@ -2695,34 +2696,14 @@ def save_bm25_index(
     stats.coalesce(1).write.mode("overwrite").parquet(f"{path}/_stats")
 
 
-# (path, stats-file mtime_ns) -> (n_docs, total_len, tok_buckets): a
-# serving process loads an index's 1-row sidecar once, like a FAISS
-# handle caches its header — mtime keying makes a rebuilt index a cache
-# miss, never a stale read
-_BM25_SIDECAR_CACHE: dict[tuple, tuple[int, int, int]] = {}
-
-
-def _bm25_index_stats(path: str) -> tuple[int, int, int]:
-    """Read the ``_stats`` sidecar DRIVER-SIDE (pyarrow — a 1-row local
-    parquet needs no Spark job; the serving hot path was paying ~0.4 s of
-    job overhead per query batch for it), memoized per (path, mtime)."""
-    import glob as _glob
-    import os as _os
-
-    import pyarrow.parquet as _pq
-
-    files = sorted(_glob.glob(_os.path.join(path, "_stats", "*.parquet")))
-    if not files:
-        raise ValueError(f"BM25 index at {path} has no _stats sidecar")
-    key = (path, _os.stat(files[0]).st_mtime_ns)
-    hit = _BM25_SIDECAR_CACHE.get(key)
-    if hit is None:
-        t = _pq.read_table(files[0]).to_pylist()
-        if not t:
-            raise ValueError(f"BM25 index at {path} has an empty _stats sidecar")
-        hit = (int(t[0]["n_docs"]), int(t[0]["total_len"]), int(t[0]["tok_buckets"]))
-        _BM25_SIDECAR_CACHE[key] = hit
-    return hit
+def _bm25_index_stats(spark, path: str) -> tuple[int, int, int]:
+    """The index's 1-row ``_stats`` sidecar, read once per index
+    incarnation like a FAISS handle caches its header (the serving hot
+    path was paying ~0.4 s of job overhead per query batch for it)."""
+    t = artifacts.small_table(spark, f"{path}/_stats", "bm25_stats")
+    if not t:
+        raise ValueError(f"BM25 index at {path} has an empty _stats sidecar")
+    return (int(t[0]["n_docs"]), int(t[0]["total_len"]), int(t[0]["tok_buckets"]))
 
 
 def bm25_index_topk(
@@ -2747,7 +2728,7 @@ def bm25_index_topk(
 
     if not queries:
         raise ValueError("queries must be a non-empty {query_id: text} dict")
-    n_docs, total_len, tok_buckets = _bm25_index_stats(path)
+    n_docs, total_len, tok_buckets = _bm25_index_stats(spark, path)
 
     # resolve term buckets with the SAME hash the writer used — on the
     # DRIVER, zero Spark jobs (functions.xxhash64_long is the tested
@@ -3099,32 +3080,15 @@ def save_lm_model(
     consts.coalesce(1).write.mode("overwrite").parquet(f"{path}/consts")
 
 
-# (path, consts-file mtime_ns) -> (nbt, v): the model's two scalar
-# constants, read driver-side once per artifact incarnation — the
-# _bm25_index_stats sidecar discipline (a 1-row local parquet needs no
-# Spark job; the old consts.take(1) probe + 1-row broadcast build cost
-# two scheduled jobs per score call)
-_LM_CONSTS_CACHE: dict[tuple, tuple[int, int]] = {}
-
-
-def _lm_model_consts(model_path: str) -> tuple[int, int]:
-    import glob as _glob
-    import os as _os
-
-    import pyarrow.parquet as _pq
-
-    files = sorted(_glob.glob(_os.path.join(model_path, "consts", "*.parquet")))
-    if not files:
-        raise ValueError(f"no committed LM model consts at {model_path}")
-    key = (model_path, _os.stat(files[0]).st_mtime_ns)
-    hit = _LM_CONSTS_CACHE.get(key)
-    if hit is None:
-        rows = _pq.read_table(files[0]).to_pylist()
-        if not rows:
-            raise ValueError(f"empty LM model at {model_path}")
-        hit = (int(rows[0]["nbt"]), int(rows[0]["v"]))
-        _LM_CONSTS_CACHE[key] = hit
-    return hit
+def _lm_model_consts(spark, model_path: str) -> tuple[int, int]:
+    """The model's (nbt, v) constants, read driver-side once per artifact
+    incarnation — the _bm25_index_stats sidecar discipline (the old
+    consts.take(1) probe + 1-row broadcast build cost two scheduled jobs
+    per score call)."""
+    rows = artifacts.small_table(spark, f"{model_path}/consts", "lm_consts")
+    if not rows:
+        raise ValueError(f"empty LM model at {model_path}")
+    return int(rows[0]["nbt"]), int(rows[0]["v"])
 
 
 def lm_scores_vs_model(
@@ -3143,17 +3107,18 @@ def lm_scores_vs_model(
     constants come from the memoized driver-side sidecar read and enter
     the smoothing arithmetic as literals — identical values, two fewer
     scheduled jobs per call than the old take(1) + 1-row broadcast."""
-    import os as _os
-
     spark = corpus.sparkSession
-    nbt, v = _lm_model_consts(model_path)
+    nbt, v = _lm_model_consts(spark, model_path)
     # explicit schemas (the shared_* artifact-reader discipline): a bare
     # spark.read.parquet pays a schema-inference job per call
     c12 = spark.read.schema("w1 string, w2 string, c12 long").parquet(f"{model_path}/c12")
     docb = _word_bigrams(corpus, text_col, id_col).groupBy(
         "doc_id", "w1", "w2"
     ).agg(F.count("*").cast("long").alias("c"))
-    if _os.path.exists(_os.path.join(model_path, "words", "_SUCCESS")):
+    # layout probe through the Hadoop FileSystem, which resolves the path
+    # exactly as the reads below do (local paths and URIs alike)
+    words_dir = spark._jvm.org.apache.hadoop.fs.Path(f"{model_path}/words")
+    if words_dir.getFileSystem(spark._jsc.hadoopConfiguration()).exists(words_dir):
         words = spark.read.schema("w string, c1 long, nfwd long, nrev long").parquet(
             f"{model_path}/words"
         )

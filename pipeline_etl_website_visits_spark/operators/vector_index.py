@@ -48,6 +48,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.types import StringType
 
+from pipeline_etl_website_visits_spark import artifacts
 from pipeline_etl_website_visits_spark.operators import ledger
 from pipeline_etl_website_visits_spark.operators.similarity import (
     _guard_driver_bytes,
@@ -617,35 +618,16 @@ def _gc_generations(path: str, base: str) -> list[str]:
 
 _FLAT_PARAM_NAMES = ("num_coarse", "dim", "quant_scale")
 
-# (path, meta mtime_ns) -> (params, quantized coarse matrix): the serving
-# handle loads the tiny meta table once per index incarnation — pyarrow,
-# driver-side, zero Spark jobs (the FAISS-handle discipline; mtime keying
-# makes a rebuild a cache miss)
-_FLAT_META_CACHE: dict[tuple, tuple[dict, "np.ndarray"]] = {}
-
-
-def _ivfflat_meta(path: str):
-    import glob as _glob
-
-    import pyarrow.parquet as _pq
-
-    files = sorted(_glob.glob(os.path.join(path, "meta", "*.parquet")))
-    if not files:
+def _ivfflat_meta(spark: SparkSession, path: str):
+    """(params, quantized coarse matrix) of a committed IVF-Flat index:
+    the serving handle loads the tiny meta table once per index
+    incarnation (the FAISS-handle discipline)."""
+    meta = artifacts.small_table(spark, os.path.join(path, "meta"), "ivfflat_meta")
+    if not meta:
         raise ValueError(f"no committed IVF-Flat meta at {path}")
-    key = (path, os.stat(files[0]).st_mtime_ns)
-    hit = _FLAT_META_CACHE.get(key)
-    if hit is None:
-        meta = [r for f in files for r in _pq.read_table(f).to_pylist()]
-        p = {
-            _FLAT_PARAM_NAMES[r["idx"]]: int(r["vec"][0])
-            for r in meta
-            if r["kind"] == "param"
-        }
-        coarse_rows = sorted((r for r in meta if r["kind"] == "coarse"), key=lambda r: r["idx"])
-        coarse_q = pq_quantize_rows([r["vec"] for r in coarse_rows], p["quant_scale"])
-        hit = (p, coarse_q)
-        _FLAT_META_CACHE[key] = hit
-    return hit
+    p = {_FLAT_PARAM_NAMES[r["idx"]]: int(r["vec"][0]) for r in meta if r["kind"] == "param"}
+    coarse_rows = sorted((r for r in meta if r["kind"] == "coarse"), key=lambda r: r["idx"])
+    return p, pq_quantize_rows([r["vec"] for r in coarse_rows], p["quant_scale"])
 
 
 def build_ivfflat_index(
@@ -775,7 +757,7 @@ def append_to_ivfflat_index(
             if applied_key in ledger.applied_keys(os.path.join(path, "applied")):
                 return False
             ledger.check_applied_key(applied_key)
-        p, coarse_q = _ivfflat_meta(path)
+        p, coarse_q = _ivfflat_meta(spark, path)
         encode = _make_flat_encoder(coarse_q, p["quant_scale"], id_col, vec_col)
         encoded = new_vectors.select(id_col, vec_col).mapInPandas(
             encode, f"{id_col} long, cell int, vec array<double>"
@@ -874,7 +856,7 @@ def ivfflat_search(
     """
     from pipeline_etl_website_visits_spark.operators.similarity import cosine_topk
 
-    p, coarse_q = _ivfflat_meta(path)
+    p, coarse_q = _ivfflat_meta(spark, path)
     num_coarse, quant_scale = p["num_coarse"], p["quant_scale"]
 
     if precollected_queries is not None:

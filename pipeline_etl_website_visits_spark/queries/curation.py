@@ -15,8 +15,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from pipeline_etl_website_visits_spark import artifacts
 from pipeline_etl_website_visits_spark.queries.registry import query
-from pipeline_etl_website_visits_spark.tables import load_table
+from pipeline_etl_website_visits_spark.tables import load_table, table_path
 
 
 # --------------------------------------------------------------------------
@@ -1016,10 +1017,8 @@ def x66(spark: SparkSession, sf_dir: str) -> DataFrame:
     # driver-side sketch: bounded by construction at 65536 prefixes, and a
     # fixed per-corpus serving input — memoized per fingerprint (r14) so
     # the sketch-build collect runs once, not per call
-    from pipeline_etl_website_visits_spark.queries.llmops import fingerprint_memo
-
-    prefixes = fingerprint_memo(
-        sf_dir, "documents", "decontam_prefixes",
+    prefixes = artifacts.memo(
+        table_path(sf_dir, "documents"), "decontam_prefixes",
         lambda: sorted(
             {r[0] for r in contam.select(F.substring("__fp", 1, 4)).collect()}
         ),
@@ -1536,9 +1535,8 @@ def x115(spark: SparkSession, sf_dir: str) -> DataFrame:
 # aggregate over it hash-matches an oracle that derives the same
 # era-dependent values straight from the documents table (era membership
 # is doc_id-deterministic: odd ids are era2). The scratch eras are built
-# once per corpus fingerprint with the stored-index build discipline
-# (pid-tagged tmp + atomic rename commit), so repeat gate/bench runs
-# never rebuild or race.
+# once per corpus fingerprint through artifacts.stored, so repeat
+# gate/bench runs never rebuild or race.
 # --------------------------------------------------------------------------
 @query(
     "x132_schema_evolution",
@@ -1554,31 +1552,21 @@ def x115(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sources", "scale"),
 )
 def x132(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from pipeline_etl_website_visits_spark.queries.llmops import (
-        _commit_scratch_build,
-        _scratch_path,
-    )
     from pipeline_etl_website_visits_spark.sources.generic import (
         read_parquet_evolving,
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    path = _scratch_path(sf_dir, "documents", "evolve")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        tmp = f"{path}.build.{os.getpid()}"
+
+    def build(tmp: str) -> None:
         era1 = docs.filter(F.col("doc_id") % 2 == 0).select("doc_id", "text")
         era2 = docs.filter(F.col("doc_id") % 2 == 1).select(
             "doc_id", F.col("text").alias("body"), "lang"
         )
-        era1.write.parquet(os.path.join(tmp, "era1"))
-        era2.write.parquet(os.path.join(tmp, "era2"))
-        # top-level commit marker: the per-era _SUCCESS files sit inside
-        # the era dirs; the rename is atomic but a reader probes this one
-        with open(os.path.join(tmp, "_SUCCESS"), "w"):
-            pass
-        _commit_scratch_build(tmp, path)
+        era1.write.parquet(f"{tmp}/era1")
+        era2.write.parquet(f"{tmp}/era2")
+
+    path = artifacts.stored(sf_dir, "documents", "evolve", build)
     merged = read_parquet_evolving(spark, path + "/era*", renames={"body": "text"})
     return (
         merged.groupBy("lang")
@@ -1632,11 +1620,10 @@ def x139(spark: SparkSession, sf_dir: str) -> DataFrame:
 # x144 — ORC as a source/sink format (columnar-format portability)
 #
 # The fact projection is snapshotted ONCE per corpus fingerprint as an
-# ORC dataset partitioned by l_returnflag (the x132/x117 scratch-build
-# discipline: pid-tagged tmp + atomic rename, _SUCCESS probed), then
-# the pricing aggregate runs ON THE ORC SNAPSHOT — certifying the ORC
-# scan path (schema, partition discovery, predicate pushdown) carries
-# the same values as the parquet original the oracle reads. Spark's
+# ORC dataset partitioned by l_returnflag (through artifacts.stored, like
+# x132/x117), then the pricing aggregate runs ON THE ORC SNAPSHOT —
+# certifying the ORC scan path (schema, partition discovery, predicate
+# pushdown) carries the same values as the parquet original the oracle reads. Spark's
 # ORC reader is vectorized + pushdown-capable like parquet; at 100 TB
 # the format choice is a storage decision, not a semantics one, and
 # this pins that.
@@ -1657,23 +1644,13 @@ def x139(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sources", "formats"),
 )
 def x144(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from pipeline_etl_website_visits_spark.queries.llmops import (
-        _commit_scratch_build,
-        _scratch_path,
+    path = artifacts.stored(
+        sf_dir, "lineitem", "orcrt",
+        lambda tmp: load_table(spark, sf_dir, "lineitem")
+        .select("l_returnflag", "l_linestatus", "l_quantity", "l_extendedprice", "l_shipdate")
+        .write.partitionBy("l_returnflag")
+        .orc(tmp),
     )
-
-    path = _scratch_path(sf_dir, "lineitem", "orcrt")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        tmp = f"{path}.build.{os.getpid()}"
-        (
-            load_table(spark, sf_dir, "lineitem")
-            .select("l_returnflag", "l_linestatus", "l_quantity", "l_extendedprice", "l_shipdate")
-            .write.partitionBy("l_returnflag")
-            .orc(tmp)
-        )
-        _commit_scratch_build(tmp, path)
     orc = spark.read.orc(path)
     return (
         orc.where(F.col("l_shipdate") <= F.lit("1995-09-02 00:00:00").cast("timestamp"))
@@ -1849,41 +1826,42 @@ def x160(spark: SparkSession, sf_dir: str) -> DataFrame:
     return compression_ratio(docs, "text", "doc_id")
 
 
-import os as _os
-
-_BM25_STATS_CACHE: dict[tuple, tuple[int, int]] = {}
-
-
 def _bm25_corpus_stats(docs, sf_dir: str) -> tuple[int, int]:
     """Corpus stats (N docs, total tokens) collected once per corpus
-    FINGERPRINT and reused across calls — the same trained-artifact
-    serving shape as _pq_codebook (x82/x84): a real deployment computes
-    these once, like a stored index's metadata, so the retrieval queries
-    shouldn't re-scan the corpus for two scalars on every call. Keyed by
-    the source file's (path, size, mtime_ns) so regenerated test data
-    can never be served stale stats. The values are exactly what the
-    in-query aggregation (and the SQL oracle) computes, so results are
-    bit-identical either way."""
-    import pyspark.sql.functions as _F
+    fingerprint and reused across calls — the same trained-artifact
+    serving shape as a stored index's metadata, so the retrieval queries
+    don't re-scan the corpus for two scalars on every call. The values are
+    exactly what the in-query aggregation (and the SQL oracle) computes,
+    so results are bit-identical either way."""
+    from pipeline_etl_website_visits_spark.operators.dedup import normalize_text
 
     def build() -> tuple[int, int]:
-        from pipeline_etl_website_visits_spark.operators.dedup import normalize_text
-
         row = docs.select(
-            _F.size(_F.split(normalize_text(_F.col("text")), " ")).cast("long").alias("dl")
-        ).agg(_F.count("*").cast("long").alias("n"), _F.sum("dl").cast("long").alias("tl")).collect()[0]
+            F.size(F.split(normalize_text(F.col("text")), " ")).cast("long").alias("dl")
+        ).agg(F.count("*").cast("long").alias("n"), F.sum("dl").cast("long").alias("tl")).collect()[0]
         return (int(row["n"]), int(row["tl"]))
 
-    src = _os.path.join(sf_dir, "documents.parquet")
-    try:
-        st = _os.stat(src)
-    except OSError:
-        return build()  # unstat-able source: never memoize blind (ADVICE r14)
-    key = (src, st.st_size, st.st_mtime_ns)
-    stats = _BM25_STATS_CACHE.get(key)
-    if stats is None:
-        stats = _BM25_STATS_CACHE[key] = build()
-    return stats
+    return artifacts.memo(table_path(sf_dir, "documents"), "bm25_corpus_stats", build)
+
+
+def _stored_bm25_index(docs: DataFrame, sf_dir: str) -> str:
+    """The stored BM25 postings index over the corpus (x172/x173)."""
+    from pipeline_etl_website_visits_spark.operators.text import save_bm25_index
+
+    return artifacts.stored(
+        sf_dir, "documents", "bm25idx",
+        lambda tmp: save_bm25_index(docs, tmp, "text", "doc_id", tok_buckets=64),
+    )
+
+
+def _stored_ivfflat_index(emb: DataFrame, sf_dir: str) -> str:
+    """The stored IVF-Flat index over the embeddings (x173/x177/x179)."""
+    from pipeline_etl_website_visits_spark.operators.vector_index import build_ivfflat_index
+
+    return artifacts.stored(
+        sf_dir, "embeddings", "ivfflat",
+        lambda tmp: build_ivfflat_index(emb, tmp, num_coarse=4),
+    )
 
 
 _BM25_QUERIES = {
@@ -2032,19 +2010,13 @@ def x165(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, "text", "doc_id", _BM25_QUERIES, k=50,
         corpus_stats=_bm25_corpus_stats(docs, sf_dir),
     ).select("query_id", "doc_id", "rank")
-    from pipeline_etl_website_visits_spark.queries.llmops import fingerprint_memo
+    from pipeline_etl_website_visits_spark.queries.llmops import probe_vectors
 
     q3 = emb.filter(F.col("vec_id") < 3)
     dense = S.cosine_topk(
         q3, emb, k=50, with_rank=True,
         # memoized probe collect (the x179/x182 fixed-serving-input rule)
-        precollected_queries=fingerprint_memo(
-            sf_dir, "embeddings", "probe_vecs3",
-            lambda: [
-                (r["vec_id"], r["embedding"])
-                for r in q3.select("vec_id", "embedding").collect()
-            ],
-        ),
+        precollected_queries=probe_vectors(sf_dir, emb, 3),
     )
     qid = (
         F.when(F.col("query_id") == 0, F.lit("q_join"))
@@ -2250,25 +2222,18 @@ def x170(spark: SparkSession, sf_dir: str) -> DataFrame:
     verbatim), then score through
     operators/text.py:dsir_scores_vs_weights, which never touches the
     target again. The write-once scratch discipline is x144's."""
-    import os
-
     from pipeline_etl_website_visits_spark.operators.text import (
         dsir_scores_vs_weights,
         save_dsir_weights,
     )
-    from pipeline_etl_website_visits_spark.queries.llmops import (
-        _commit_scratch_build,
-        _scratch_path,
-    )
 
     docs = load_table(spark, sf_dir, "documents")
-    path = _scratch_path(sf_dir, "documents", "dsirw")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        tmp = f"{path}.build.{os.getpid()}"
-        save_dsir_weights(
+    path = artifacts.stored(
+        sf_dir, "documents", "dsirw",
+        lambda tmp: save_dsir_weights(
             docs.where(F.col("source") == "src0"), docs, tmp, buckets=1024, portable_hash=True
-        )
-        _commit_scratch_build(tmp, path)
+        ),
+    )
     return dsir_scores_vs_weights(docs, path, "text", "doc_id")
 
 
@@ -2292,24 +2257,10 @@ def x172(spark: SparkSession, sf_dir: str) -> DataFrame:
     the query terms' tok_bucket partitions. Identical output to x163
     because the postings/stats are faithful — one oracle certifies
     both the index build and the pruned serve."""
-    import os
-
-    from pipeline_etl_website_visits_spark.operators.text import (
-        bm25_index_topk,
-        save_bm25_index,
-    )
-    from pipeline_etl_website_visits_spark.queries.llmops import (
-        _commit_scratch_build,
-        _scratch_path,
-    )
+    from pipeline_etl_website_visits_spark.operators.text import bm25_index_topk
 
     docs = load_table(spark, sf_dir, "documents")
-    path = _scratch_path(sf_dir, "documents", "bm25idx")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        tmp = f"{path}.build.{os.getpid()}"
-        save_bm25_index(docs, tmp, "text", "doc_id", tok_buckets=64)
-        _commit_scratch_build(tmp, path)
-    return bm25_index_topk(spark, path, _BM25_QUERIES, k=10)
+    return bm25_index_topk(spark, _stored_bm25_index(docs, sf_dir), _BM25_QUERIES, k=10)
 
 
 @query(
@@ -2369,56 +2320,26 @@ def x173(spark: SparkSession, sf_dir: str) -> DataFrame:
     certified by the same oracle; serving cost is pruned-postings +
     stored-cells, never a corpus tokenize or an embedding-table rescan.
     """
-    import os
-
     from pipeline_etl_website_visits_spark.operators.similarity import (
         reciprocal_rank_fusion,
     )
-    from pipeline_etl_website_visits_spark.operators.text import (
-        bm25_index_topk,
-        save_bm25_index,
-    )
-    from pipeline_etl_website_visits_spark.operators.vector_index import (
-        build_ivfflat_index,
-        ivfflat_search,
-    )
-    from pipeline_etl_website_visits_spark.queries.llmops import (
-        _commit_scratch_build,
-        _scratch_path,
-    )
+    from pipeline_etl_website_visits_spark.operators.text import bm25_index_topk
+    from pipeline_etl_website_visits_spark.operators.vector_index import ivfflat_search
+    from pipeline_etl_website_visits_spark.queries.llmops import probe_vectors
 
     # lexical leg: the SAME stored postings artifact x172 serves from
     docs = load_table(spark, sf_dir, "documents")
-    bm25_path = _scratch_path(sf_dir, "documents", "bm25idx")
-    if not os.path.exists(os.path.join(bm25_path, "_SUCCESS")):
-        tmp = f"{bm25_path}.build.{os.getpid()}"
-        save_bm25_index(docs, tmp, "text", "doc_id", tok_buckets=64)
-        _commit_scratch_build(tmp, bm25_path)
-    lex = bm25_index_topk(spark, bm25_path, _BM25_QUERIES, k=50).select(
+    lex = bm25_index_topk(spark, _stored_bm25_index(docs, sf_dir), _BM25_QUERIES, k=50).select(
         "query_id", "doc_id", "rank"
     )
 
-    # dense leg: stored IVF-Flat index (meta/_SUCCESS is the build's
-    # commit marker — written last by build_ivfflat_index)
+    # dense leg: the stored IVF-Flat index
     emb = load_table(spark, sf_dir, "embeddings")
-    flat_path = _scratch_path(sf_dir, "embeddings", "ivfflat")
-    if not os.path.exists(os.path.join(flat_path, "meta", "_SUCCESS")):
-        tmp = f"{flat_path}.build.{os.getpid()}"
-        build_ivfflat_index(emb, tmp, num_coarse=4)
-        _commit_scratch_build(tmp, flat_path)
-    from pipeline_etl_website_visits_spark.queries.llmops import fingerprint_memo
-
     q3 = emb.filter(F.col("vec_id") < 3)
     dense = ivfflat_search(
-        spark, flat_path, q3, k=50, with_rank=True,
+        spark, _stored_ivfflat_index(emb, sf_dir), q3, k=50, with_rank=True,
         # memoized probe collect (the x179/x182 fixed-serving-input rule)
-        precollected_queries=fingerprint_memo(
-            sf_dir, "embeddings", "probe_vecs3",
-            lambda: [
-                (r["vec_id"], r["embedding"])
-                for r in q3.select("vec_id", "embedding").collect()
-            ],
-        ),
+        precollected_queries=probe_vectors(sf_dir, emb, 3),
     )
     qid = (
         F.when(F.col("query_id") == 0, F.lit("q_join"))
@@ -2591,23 +2512,16 @@ def x176(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONCE per corpus fingerprint (x144's write-once scratch discipline),
     then score through operators/text.py:lm_scores_vs_model — x175's
     oracle applies verbatim."""
-    import os
-
     from pipeline_etl_website_visits_spark.operators.text import (
         lm_scores_vs_model,
         save_lm_model,
     )
-    from pipeline_etl_website_visits_spark.queries.llmops import (
-        _commit_scratch_build,
-        _scratch_path,
-    )
 
     docs = load_table(spark, sf_dir, "documents")
-    path = _scratch_path(sf_dir, "documents", "lmmodel")
-    if not os.path.exists(os.path.join(path, "consts", "_SUCCESS")):
-        tmp = f"{path}.build.{os.getpid()}"
-        save_lm_model(docs.where(F.col("source") == "src0"), tmp)
-        _commit_scratch_build(tmp, path)
+    path = artifacts.stored(
+        sf_dir, "documents", "lmmodel",
+        lambda tmp: save_lm_model(docs.where(F.col("source") == "src0"), tmp),
+    )
     return lm_scores_vs_model(docs, path)
 
 
@@ -2660,36 +2574,15 @@ def x177(spark: SparkSession, sf_dir: str) -> DataFrame:
     because cell assignment/probing is exact integer geometry and the
     within-cell ranking is the certified cosine kernel. Shares the x173
     scratch artifact."""
-    import os
-
-    from pipeline_etl_website_visits_spark.operators.vector_index import (
-        build_ivfflat_index,
-        ivfflat_search,
-    )
-    from pipeline_etl_website_visits_spark.queries.llmops import (
-        _commit_scratch_build,
-        _scratch_path,
-    )
+    from pipeline_etl_website_visits_spark.operators.vector_index import ivfflat_search
+    from pipeline_etl_website_visits_spark.queries.llmops import probe_vectors
 
     emb = load_table(spark, sf_dir, "embeddings")
-    flat_path = _scratch_path(sf_dir, "embeddings", "ivfflat")
-    if not os.path.exists(os.path.join(flat_path, "meta", "_SUCCESS")):
-        tmp = f"{flat_path}.build.{os.getpid()}"
-        build_ivfflat_index(emb, tmp, num_coarse=4)
-        _commit_scratch_build(tmp, flat_path)
-    from pipeline_etl_website_visits_spark.queries.llmops import fingerprint_memo
-
     q3 = emb.filter(F.col("vec_id") < 3)
     return ivfflat_search(
-        spark, flat_path, q3, k=10, nprobe=2, with_rank=True,
+        spark, _stored_ivfflat_index(emb, sf_dir), q3, k=10, nprobe=2, with_rank=True,
         # memoized probe collect (the x179/x182 fixed-serving-input rule)
-        precollected_queries=fingerprint_memo(
-            sf_dir, "embeddings", "probe_vecs3",
-            lambda: [
-                (r["vec_id"], r["embedding"])
-                for r in q3.select("vec_id", "embedding").collect()
-            ],
-        ),
+        precollected_queries=probe_vectors(sf_dir, emb, 3),
     )
 
 
@@ -2768,39 +2661,18 @@ def x179(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-10. Shares the x173/x177 scratch index artifact; the exact leg is
     the certified cosine_topk kernel. recall_ppm = n_hits * 1e6 / 10 —
     exact integer (k fixed at 10)."""
-    import os
-
     from pipeline_etl_website_visits_spark.operators.similarity import cosine_topk
-    from pipeline_etl_website_visits_spark.operators.vector_index import (
-        build_ivfflat_index,
-        ivfflat_search,
-    )
-    from pipeline_etl_website_visits_spark.queries.llmops import (
-        _commit_scratch_build,
-        _scratch_path,
-    )
+    from pipeline_etl_website_visits_spark.operators.vector_index import ivfflat_search
+    from pipeline_etl_website_visits_spark.queries.llmops import probe_vectors
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 3)
-    flat_path = _scratch_path(sf_dir, "embeddings", "ivfflat")
-    if not os.path.exists(os.path.join(flat_path, "meta", "_SUCCESS")):
-        tmp = f"{flat_path}.build.{os.getpid()}"
-        build_ivfflat_index(emb, tmp, num_coarse=4)
-        _commit_scratch_build(tmp, flat_path)
     # one memoized collect feeds BOTH legs' kernels and the probe planning —
     # the 3-row query relation would otherwise pay a job per leg per call
-    # (probe vectors are fixed serving inputs: the _pq_codebook discipline)
-    from pipeline_etl_website_visits_spark.queries.llmops import fingerprint_memo
-
-    q_rows = fingerprint_memo(
-        sf_dir, "embeddings", "probe_vecs3",
-        lambda: [
-            (r["vec_id"], r["embedding"])
-            for r in q.select("vec_id", "embedding").collect()
-        ],
-    )
+    # (probe vectors are fixed serving inputs)
+    q_rows = probe_vectors(sf_dir, emb, 3)
     pruned = ivfflat_search(
-        spark, flat_path, q, k=10, nprobe=2, precollected_queries=q_rows
+        spark, _stored_ivfflat_index(emb, sf_dir), q, k=10, nprobe=2, precollected_queries=q_rows
     ).select("query_id", "neighbor_id")
     exact = cosine_topk(q, emb, k=10, precollected_queries=q_rows).select(
         "query_id", "neighbor_id"
@@ -2903,18 +2775,12 @@ def x182(spark: SparkSession, sf_dir: str) -> DataFrame:
         cosine_topk_widths,
     )
 
-    from pipeline_etl_website_visits_spark.queries.llmops import fingerprint_memo
+    from pipeline_etl_website_visits_spark.queries.llmops import probe_vectors
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 3)
     # memoized probe collect — the x179 rationale
-    q_rows = fingerprint_memo(
-        sf_dir, "embeddings", "probe_vecs3",
-        lambda: [
-            (r["vec_id"], r["embedding"])
-            for r in q.select("vec_id", "embedding").collect()
-        ],
-    )
+    q_rows = probe_vectors(sf_dir, emb, 3)
     full_dim = len(q_rows[0][1])
     multi = cosine_topk_widths(
         emb, [full_dim, *_MRL_DIMS], q_rows, k=10

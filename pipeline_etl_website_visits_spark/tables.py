@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from pipeline_etl_website_visits_spark import artifacts
+
 TABLES = (
     "region",
     "nation",
@@ -36,12 +38,14 @@ def table_path(sf_dir: str, name: str) -> str:
 # Per-session DataFrame memo: repeated loads of the same table re-list the
 # directory and re-read parquet footers during analysis; reusing the analyzed
 # DataFrame removes that fixed cost from every query (a DataFrame is an
-# immutable lazy plan — safe to share).
-_TABLE_CACHE: dict[tuple[int, str, str, bool], DataFrame] = {}
+# immutable lazy plan — safe to share). The key carries the table's stored-
+# artifact fingerprint, so a rewritten table is listed again, never served
+# from a plan whose files are gone.
+_TABLE_CACHE: dict[tuple[int, str, str, bool, str], DataFrame] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str, fan_out: bool = False) -> DataFrame:
-    key = (id(spark), sf_dir, name, fan_out)
+    key = (id(spark), sf_dir, name, fan_out, artifacts.fingerprint(sf_dir, name))
     df = _TABLE_CACHE.get(key)
     if df is None:
         df = _load_normalized(spark, sf_dir, name)

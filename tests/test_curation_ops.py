@@ -1446,6 +1446,27 @@ def test_stored_lm_model_v1_layout_still_reads(spark, tmp_path):
     assert got_v1 == got_v2 and len(got_v1) > 0
 
 
+def test_stored_lm_model_reads_from_a_uri(spark, tmp_path):
+    """A stored LM addressed by a ``file://`` URI scores exactly like the
+    plain path: the driver cannot glob a URI, so the constants are read
+    through Spark and the layout is probed through the Hadoop FileSystem."""
+    from pipeline_etl_website_visits_spark.operators.text import (
+        lm_scores_vs_model,
+        save_lm_model,
+    )
+    from pipeline_etl_website_visits_spark.tables import load_table
+    from tests.conftest import SF_DIR
+
+    docs = load_table(spark, SF_DIR, "documents")
+    target = docs.where(F.col("source") == "src0")
+    for layout in ("v1", "v2"):
+        path = str(tmp_path / layout)
+        save_lm_model(target, path, layout=layout)
+        plain = sorted(map(tuple, lm_scores_vs_model(docs, path).collect()))
+        uri = sorted(map(tuple, lm_scores_vs_model(docs, "file://" + path).collect()))
+        assert uri == plain and len(plain) > 0
+
+
 def test_portable_minhash_recall_and_exactness(spark):
     """The portable (md5-u48) MinHash-LSH path: every emitted pair is an
     exact-Jaccard-verified true pair at the threshold, and the planted

@@ -214,7 +214,7 @@ def test_fingerprint_memo_never_memoizes_unstatable_sources(tmp_path):
     """ADVICE r14: when os.stat can't see the source table, the memo must
     rebuild every call — a (None, None) key would never invalidate and
     could serve stale inputs after a regeneration."""
-    from pipeline_etl_website_visits_spark.queries.llmops import fingerprint_memo
+    from pipeline_etl_website_visits_spark.artifacts import memo
 
     calls = []
 
@@ -222,9 +222,9 @@ def test_fingerprint_memo_never_memoizes_unstatable_sources(tmp_path):
         calls.append(1)
         return len(calls)
 
-    missing = str(tmp_path / "no_such_dir")
-    assert fingerprint_memo(missing, "documents", "t_memo", build) == 1
-    assert fingerprint_memo(missing, "documents", "t_memo", build) == 2
+    missing = str(tmp_path / "no_such_dir" / "documents.parquet")
+    assert memo(missing, "t_memo", build) == 1
+    assert memo(missing, "t_memo", build) == 2
 
 
 def test_dedup_end_to_end_pipeline(spark):

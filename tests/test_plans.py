@@ -747,12 +747,11 @@ def test_served_hybrid_matches_inline_hybrid_exactly(spark, tmp_path, monkeypatc
     legs inline) — build+serve+fusion certified against the same values.
     The scratch artifacts build under a temp dir so this test owns its
     index lifecycle."""
-    import pipeline_etl_website_visits_spark.queries.llmops as llmops
+    from pipeline_etl_website_visits_spark import artifacts
     from pipeline_etl_website_visits_spark.queries.registry import REGISTRY
 
-    real = llmops._scratch_path
     monkeypatch.setattr(
-        llmops,
+        artifacts,
         "_scratch_path",
         lambda sf_dir, table, kind: str(tmp_path / f"{table}_{kind}"),
     )

@@ -67,152 +67,6 @@ def test_no_bare_round_of_division_in_oracles():
     assert not offenders, offenders
 
 
-def test_scratch_path_fingerprints_source_data(tmp_path):
-    """ADVICE r5: the scratch-index tag must change when the source data
-    is regenerated — a stale stored index can never be silently reused."""
-    from pipeline_etl_website_visits_spark.queries.llmops import _scratch_path
-
-    src = tmp_path / "documents.parquet"
-    src.mkdir()
-    (src / "part-0.parquet").write_bytes(b"abc")
-    p1 = _scratch_path(str(tmp_path), "documents", "gramidx")
-    assert p1 == _scratch_path(str(tmp_path), "documents", "gramidx")  # stable
-    (src / "part-0.parquet").write_bytes(b"abcd")  # regenerated data
-    assert _scratch_path(str(tmp_path), "documents", "gramidx") != p1
-    # underscore/success files don't perturb the tag (committers write them)
-    (src / "_SUCCESS").write_bytes(b"")
-    p3 = _scratch_path(str(tmp_path), "documents", "gramidx")
-    assert p3 == _scratch_path(str(tmp_path), "documents", "gramidx")
-
-
-def test_commit_scratch_build_single_winner(tmp_path):
-    """Two concurrent builders race on one atomic rename: first wins,
-    the loser's build dir is discarded — no shared build dir, ever."""
-    from pipeline_etl_website_visits_spark.queries.llmops import (
-        _commit_scratch_build,
-    )
-
-    a = tmp_path / "x.build.1"
-    b = tmp_path / "x.build.2"
-    for d, txt in ((a, "A"), (b, "B")):
-        d.mkdir()
-        (d / "f").write_text(txt)
-    final = str(tmp_path / "x")
-    _commit_scratch_build(str(a), final)
-    _commit_scratch_build(str(b), final)
-    assert (tmp_path / "x" / "f").read_text() == "A"  # winner intact
-    assert not a.exists() and not b.exists()  # loser cleaned up
-
-
-def test_commit_prunes_stale_fingerprint_dirs(tmp_path):
-    """A committed build removes the SAME corpus's old-fingerprint dirs
-    and hour-old crashed build leftovers, but never a same-fingerprint
-    concurrent build dir or another corpus's live index."""
-    import os
-
-    from pipeline_etl_website_visits_spark.queries.llmops import (
-        _commit_scratch_build,
-    )
-
-    dead_pid = 4194311  # > default pid_max — kill(pid, 0) is ESRCH, always
-    stale = tmp_path / "spark_graft_k_sf1_oldfp"
-    stale.mkdir()
-    crashed = tmp_path / f"spark_graft_k_sf1_newfp.build.{dead_pid}"
-    crashed.mkdir()
-    os.utime(crashed, (0, 0))  # ancient + dead builder — prunable
-    other_corpus = tmp_path / "spark_graft_k_sf2_anyfp"
-    other_corpus.mkdir()
-    racing = tmp_path / f"spark_graft_k_sf1_newfp.build.{dead_pid + 1}"
-    racing.mkdir()  # fresh mtime — a live concurrent builder
-    slow = tmp_path / f"spark_graft_k_sf1_newfp.build.{os.getpid()}"
-    slow.mkdir()
-    os.utime(slow, (0, 0))  # ancient mtime but the builder pid is ALIVE
-    tmp = tmp_path / "spark_graft_k_sf1_newfp.build.1"
-    tmp.mkdir()
-    (tmp / "f").write_text("x")
-    _commit_scratch_build(str(tmp), str(tmp_path / "spark_graft_k_sf1_newfp"))
-    assert (tmp_path / "spark_graft_k_sf1_newfp" / "f").read_text() == "x"
-    assert not stale.exists()  # old fingerprint pruned
-    assert not crashed.exists()  # ancient crashed build pruned
-    assert other_corpus.exists()  # different corpus untouched
-    assert racing.exists()  # live same-fingerprint builder untouched
-    # ADVICE r13: an hour-old build whose pid is still running is a
-    # long-running FIRST-TIME build, not a crash — never rmtree'd mid-write
-    assert slow.exists()
-
-
-def test_gc_scratch_artifacts_sweeps_stale_keeps_live(spark, tmp_path):
-    """VERDICT r12 item 6: the standalone retention sweep removes
-    stale-fingerprint and undeclared-corpus artifacts, keeps fresh
-    concurrent builds, and NEVER touches the live artifact — proven by a
-    reader whose DataFrame was resolved BEFORE the sweep still scanning
-    clean afterwards."""
-    import os
-
-    from pipeline_etl_website_visits_spark.queries.llmops import (
-        _corpus_tags,
-        gc_scratch_artifacts,
-    )
-
-    corpus = tmp_path / "sf"
-    src = corpus / "documents.parquet"
-    src.mkdir(parents=True)
-    (src / "part-0.parquet").write_bytes(b"data")
-    sftag, fptag = _corpus_tags(str(corpus), "documents")
-
-    root = tmp_path / "scratch"
-    root.mkdir()
-    live = root / f"spark_graft_pairovl_{sftag}_{fptag}"
-    spark.createDataFrame([(1, 2)], "doc_a long, doc_b long").write.parquet(str(live))
-    stale = root / f"spark_graft_pairovl_{sftag}_{'0' * 12}"
-    stale.mkdir()
-    unknown = root / f"spark_graft_bm25idx_{'f' * 8}_{'e' * 12}"
-    unknown.mkdir()
-    dead_pid = 4194311  # > default pid_max — kill(pid, 0) is ESRCH, always
-    crashed = root / f"spark_graft_pairovl_{sftag}_{fptag}.build.{dead_pid}"
-    crashed.mkdir()
-    os.utime(crashed, (0, 0))
-    racing = root / f"spark_graft_pairovl_{sftag}_{fptag}.build.{dead_pid + 1}"
-    racing.mkdir()  # fresh — a live concurrent builder
-    slow = root / f"spark_graft_pairovl_{sftag}_{fptag}.build.{os.getpid()}"
-    slow.mkdir()
-    os.utime(slow, (0, 0))  # ancient mtime, but the builder pid is ALIVE
-    not_ours = root / "somebody_elses_dir"
-    not_ours.mkdir()
-
-    reader = spark.read.parquet(str(live))  # resolved pre-sweep
-    removed = gc_scratch_artifacts([str(corpus)], scratch_root=str(root))
-
-    assert sorted(os.path.basename(p) for p in removed) == sorted(
-        [stale.name, unknown.name, crashed.name]
-    )
-    assert live.exists() and racing.exists() and not_ours.exists()
-    # ADVICE r13: an old build dir whose pid still runs is a long-running
-    # live build — kept regardless of age (liveness beats the age rule)
-    assert slow.exists()
-    assert reader.collect()[0]["doc_a"] == 1  # concurrent read survives
-
-    # grace window: a stale dir younger than min_age_s is kept
-    stale2 = root / f"spark_graft_pairovl_{sftag}_{'1' * 12}"
-    stale2.mkdir()
-    assert gc_scratch_artifacts([str(corpus)], scratch_root=str(root), min_age_s=3600) == []
-    assert stale2.exists()
-
-
-def test_commit_scratch_build_reraises_real_failures(tmp_path):
-    """A rename that fails while the target does NOT exist is a real
-    error (EACCES/EXDEV/...) — it must re-raise, not silently discard
-    the build and surface later as a missing-index mystery."""
-    import pytest
-
-    from pipeline_etl_website_visits_spark.queries.llmops import (
-        _commit_scratch_build,
-    )
-
-    with pytest.raises(OSError):
-        _commit_scratch_build(str(tmp_path / "never_built"), str(tmp_path / "x"))
-
-
 def test_coverage_crosswalk_is_current():
     """docs/COVERAGE.md's generated registry-crosswalk block must match
     the live registry (VERDICT r9 item 8: the crosswalk cannot drift —

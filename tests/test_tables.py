@@ -139,3 +139,21 @@ def test_fan_out_sizes_directory_tables_by_their_part_files(spark, tmp_path):
             spark.conf.unset("spark.graft.fanOutBytesPerTask")
         else:
             spark.conf.set("spark.graft.fanOutBytesPerTask", prev)
+
+
+def test_reload_after_regenerating_a_directory_table(spark, tmp_path):
+    """A directory table rewritten with a new part file in the same session
+    loads the new files: the memo key carries the table's fingerprint, so
+    the cached plan over the deleted part is not served again."""
+    src = tmp_path / "documents.parquet"
+    src.mkdir()
+
+    def write(part: str, n: int) -> None:
+        for old in src.iterdir():
+            old.unlink()
+        pq.write_table(pa.table({"doc_id": pa.array(range(n), type=pa.int64())}), src / part)
+
+    write("part-0.parquet", 10)
+    assert load_table(spark, str(tmp_path), "documents").count() == 10
+    write("part-1.parquet", 50)
+    assert load_table(spark, str(tmp_path), "documents").count() == 50
